@@ -63,91 +63,12 @@ def main() -> None:
     except ValueError:
         sf = -1.0  # non-conforming dir name: record "unknown", don't crash
 
-    # A single-JVM local[N] bench runs ~230 query executions in one
-    # process; Spark's ContextCleaner only reclaims dead shuffle files /
-    # broadcast blocks when driver GC processes their weak refs, and its
-    # safety-net periodic GC defaults to 30 MINUTES — longer than the
-    # whole bench. Without forcing GC, block-manager debris from earlier
-    # queries steals executor memory from later ones (round-4 symptom:
-    # lap2_total > cold_total, with late-catalog queries 2-7x their
-    # standalone times). Shorten the cleaner's net and force a full GC
-    # every GC_EVERY queries; on a real cluster the same knob is the
-    # standard long-running-driver setting.
-    spark = get_spark(
-        "ssqe-bench",
-        master=f"local[{cpus}]",
-        extra_confs={
-            "spark.cleaner.periodicGC.interval": "1min",
-            # pin the default explicitly: the cold-lap analysis (r10
-            # notes) attributed the first-touch excess on ~10
-            # Arrow-batched queries to Python worker spawn — reuse must
-            # stay on for the pool warm-up below to amortize it
-            "spark.python.worker.reuse": "true",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    GC_EVERY = 8  # was 15; the catalog grew ~25% in round 6 and late
-    # queries were again measuring other queries' garbage (lap2 > cold
-    # on individual late entries while standalone runs were 2-3x faster)
-
-    def force_gc() -> None:
-        import gc
-
-        # CacheManager entries (DataFrame .cache() inside catalog
-        # queries: LSH bands, graph edge lists, classifier features)
-        # are NOT freed by GC — they live until explicit unpersist or
-        # session end, so across ~230 query executions per lap they
-        # steal executor storage from later queries AND let laps 2-4
-        # reuse lap 1's cache (dishonest per-lap numbers). Clearing at
-        # every GC checkpoint (GC_EVERY queries) keeps measurements
-        # independent across laps.
-        spark.catalog.clearCache()
-        gc.collect()  # drop py4j handles so JVM weak refs can clear
-        # two JVM passes: the first clears strong refs and enqueues weak
-        # refs, the second lets the ContextCleaner's processed refs'
-        # shuffle/broadcast blocks actually drop
-        spark.sparkContext._jvm.System.gc()
-        spark.sparkContext._jvm.System.gc()
+    spark = bench_spark("ssqe-bench", cpus)
 
     import __spark_entry__ as entrymod
 
     queries = dict(catalog.get_queries())
-
-    # warmup: initialize executors/codegen against a tiny table
-    run_df(spark.read.parquet(f"{sf_dir}/region.parquet"))
-
-    # warm the PYTHON WORKER POOL too (r11, verdict #7): the first
-    # mapInPandas/pandas-UDF task on each core forks a worker (~50 ms
-    # each), a one-time cost that landed inside the cold lap's ~10
-    # first-touch Arrow queries.  One no-op mapInPandas with one task
-    # per core spawns the whole pool up front; with worker reuse on,
-    # every later Arrow query finds an idle worker.
-    def _noop_batches(batches):
-        yield from batches
-
-    run_df(
-        spark.range(0, cpus, 1, numPartitions=cpus).mapInPandas(
-            _noop_batches, "id long"
-        )
-    )
-
-    # the Python DataSource machinery runs in its OWN worker classes
-    # (driver-side plan worker + executor read workers) that the
-    # mapInPandas pool does not pre-fork — s1_datasource_scan carried
-    # +2.9s of that startup in the r11 quiet cold lap.  One single-page
-    # read warms both.
-    from starryskyqueryengine_spark.sources.paged_datasource import (
-        register_paged_sources,
-    )
-
-    register_paged_sources(spark)
-    run_df(
-        spark.read.format("starrysky_paged")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("max_pages", "1")
-        .option("num_partitions", "1")
-        .load()
-    )
+    warm_up(spark, sf_dir, cpus)
 
     # ONE cold lap + THREE steady laps (round-7 verdict #7, refined in
     # round 8): the cold lap carries one-time whole-stage-codegen
@@ -165,42 +86,7 @@ def main() -> None:
     # estimates the steady state it claims to measure.)  The per-query
     # min across all laps is kept as a sidecar for continuity with
     # rounds <= 7, whose `value` was best-of-two.
-    # Adaptive GC: the round-8 window front-loads the heavy iterative /
-    # capstone queries back to back, and their shuffle+checkpoint debris
-    # measurably contaminated later queries (label_prop_communities
-    # 8.3 s cold -> 29-31 s in laps 2-3 under GC_EVERY=8 alone; with a
-    # GC after every heavy query the same laps run 7-9 s flat).  A GC
-    # after any query slower than GC_AFTER_SEC plus the every-GC_EVERY
-    # floor keeps the overhead to the queries that actually generate
-    # garbage.
-    GC_AFTER_SEC = 1.0
-    laps: list[dict[str, float]] = [{}, {}, {}, {}]
-    for lap in laps:
-        # lap boundary: the previous lap ends with flagship_materialize
-        # (heavy, outside the adaptive loop) — GC before the next lap's
-        # first measurements
-        force_gc()
-        since_gc = 0
-        for name, fn in queries.items():
-            if since_gc >= GC_EVERY:
-                force_gc()
-                since_gc = 0
-            t0 = time.perf_counter()
-            run_df(fn(spark, sf_dir))
-            dt = time.perf_counter() - t0
-            lap[name] = round(dt, 4)
-            # intra-query caches (signature tables etc.) are scoped to
-            # the query; drop them so queries are measured independently
-            spark.catalog.clearCache()
-            if dt > GC_AFTER_SEC:
-                force_gc()
-                since_gc = 0
-            else:
-                since_gc += 1
-        t0 = time.perf_counter()
-        run_df(entrymod.entry(spark))
-        lap["flagship_materialize"] = round(time.perf_counter() - t0, 4)
-        spark.catalog.clearCache()
+    laps = [run_lap(spark, sf_dir, queries, entrymod.entry) for _ in range(4)]
 
     cold, lap2, lap3, lap4 = laps
     median = {k: sorted([lap2[k], lap3[k], lap4[k]])[1] for k in cold}
@@ -586,6 +472,143 @@ def main() -> None:
     compact["queries_full"] = "bench_full.json"
     sys.stdout.flush()
     print(json.dumps(compact), flush=True)
+
+
+# Queries between forced GCs: the catalog grew ~25% in round 6 and late
+# queries were again measuring other queries' garbage (lap2 > cold on
+# individual late entries while standalone runs were 2-3x faster).
+GC_EVERY = 8
+# Adaptive GC: the round-8 window front-loads the heavy iterative /
+# capstone queries back to back, and their shuffle+checkpoint debris
+# measurably contaminated later queries (label_prop_communities 8.3 s
+# cold -> 29-31 s in laps 2-3 under GC_EVERY=8 alone; with a GC after
+# every heavy query the same laps run 7-9 s flat).  A GC after any query
+# slower than GC_AFTER_SEC plus the every-GC_EVERY floor keeps the
+# overhead to the queries that actually generate garbage.
+GC_AFTER_SEC = 1.0
+
+
+def bench_spark(app_name: str, cpus: int):
+    """The session every catalog lap runs on (bench.py, tools/lap_total.py,
+    tools/standalone_bench.py).
+
+    A single-JVM local[N] bench runs ~230 query executions in one
+    process; Spark's ContextCleaner only reclaims dead shuffle files /
+    broadcast blocks when driver GC processes their weak refs, and its
+    safety-net periodic GC defaults to 30 MINUTES — longer than the
+    whole bench. Without forcing GC, block-manager debris from earlier
+    queries steals executor memory from later ones (round-4 symptom:
+    lap2_total > cold_total, with late-catalog queries 2-7x their
+    standalone times). Shorten the cleaner's net and force a full GC
+    every GC_EVERY queries; on a real cluster the same knob is the
+    standard long-running-driver setting."""
+    spark = get_spark(
+        app_name,
+        master=f"local[{cpus}]",
+        extra_confs={
+            "spark.cleaner.periodicGC.interval": "1min",
+            # pin the default explicitly: the cold-lap analysis (r10
+            # notes) attributed the first-touch excess on ~10
+            # Arrow-batched queries to Python worker spawn — reuse must
+            # stay on for the pool warm-up to amortize it
+            "spark.python.worker.reuse": "true",
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def force_gc(spark) -> None:
+    import gc
+
+    # CacheManager entries (DataFrame .cache() inside catalog
+    # queries: LSH bands, graph edge lists, classifier features)
+    # are NOT freed by GC — they live until explicit unpersist or
+    # session end, so across ~230 query executions per lap they
+    # steal executor storage from later queries AND let laps 2-4
+    # reuse lap 1's cache (dishonest per-lap numbers). Clearing at
+    # every GC checkpoint (GC_EVERY queries) keeps measurements
+    # independent across laps.
+    spark.catalog.clearCache()
+    gc.collect()  # drop py4j handles so JVM weak refs can clear
+    # two JVM passes: the first clears strong refs and enqueues weak
+    # refs, the second lets the ContextCleaner's processed refs'
+    # shuffle/broadcast blocks actually drop
+    spark.sparkContext._jvm.System.gc()
+    spark.sparkContext._jvm.System.gc()
+
+
+def warm_up(spark, sf_dir: str, cpus: int) -> None:
+    """One-time costs a 100 TB run amortizes to nothing, paid before
+    the first lap."""
+    # initialize executors/codegen against a tiny table
+    run_df(spark.read.parquet(f"{sf_dir}/region.parquet"))
+
+    # warm the PYTHON WORKER POOL too (r11, verdict #7): the first
+    # mapInPandas/pandas-UDF task on each core forks a worker (~50 ms
+    # each), a one-time cost that landed inside the cold lap's ~10
+    # first-touch Arrow queries.  One no-op mapInPandas with one task
+    # per core spawns the whole pool up front; with worker reuse on,
+    # every later Arrow query finds an idle worker.  (Nested, so it is
+    # pickled by value: workers need not import this module.)
+    def _noop_batches(batches):
+        yield from batches
+
+    run_df(
+        spark.range(0, cpus, 1, numPartitions=cpus).mapInPandas(
+            _noop_batches, "id long"
+        )
+    )
+
+    # the Python DataSource machinery runs in its OWN worker classes
+    # (driver-side plan worker + executor read workers) that the
+    # mapInPandas pool does not pre-fork — s1_datasource_scan carried
+    # +2.9s of that startup in the r11 quiet cold lap.  One single-page
+    # read warms both.
+    from starryskyqueryengine_spark.sources.paged_datasource import (
+        register_paged_sources,
+    )
+
+    register_paged_sources(spark)
+    run_df(
+        spark.read.format("starrysky_paged")
+        .option("path", f"{sf_dir}/documents.parquet")
+        .option("max_pages", "1")
+        .option("num_partitions", "1")
+        .load()
+    )
+
+
+def run_lap(spark, sf_dir: str, queries: dict, entry) -> dict[str, float]:
+    """One catalog lap against the noop sink, flagship ``entry`` last:
+    ``{query: seconds}``, each timed from plan build to sink commit."""
+    lap: dict[str, float] = {}
+    # lap boundary: the previous lap ends with flagship_materialize
+    # (heavy, outside the adaptive loop) — GC before the next lap's
+    # first measurements
+    force_gc(spark)
+    since_gc = 0
+    for name, fn in queries.items():
+        if since_gc >= GC_EVERY:
+            force_gc(spark)
+            since_gc = 0
+        t0 = time.perf_counter()
+        run_df(fn(spark, sf_dir))
+        dt = time.perf_counter() - t0
+        lap[name] = round(dt, 4)
+        # intra-query caches (signature tables etc.) are scoped to
+        # the query; drop them so queries are measured independently
+        spark.catalog.clearCache()
+        if dt > GC_AFTER_SEC:
+            force_gc(spark)
+            since_gc = 0
+        else:
+            since_gc += 1
+    t0 = time.perf_counter()
+    run_df(entry(spark))
+    lap["flagship_materialize"] = round(time.perf_counter() - t0, 4)
+    spark.catalog.clearCache()
+    return lap
 
 
 if __name__ == "__main__":

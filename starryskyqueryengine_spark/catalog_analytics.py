@@ -13,9 +13,12 @@ well-distributed key and codegen'd aggregates/windows.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from . import derived
 from .catalog import register
 from .operators.rangejoin import interval_count_join
 from .session import scoped_shuffle_partitions
@@ -1234,6 +1237,35 @@ def q20_excess_supply(spark, sf_dir):
     )
 
 
+def _zorder_layout_path(sf_dir) -> str:
+    # per-uid, dataset-fingerprinted, ownership-gated (derived.owned_dir):
+    # a pre-planted dir at the predictable temp path is never trusted as
+    # a cache AND never written into (its owner could swap the files
+    # between our write and our read)
+    return derived.owned_dir(
+        "starrysky_zorder", os.path.join(str(sf_dir), "lineitem.parquet")
+    )
+
+
+def build_zorder_layout(spark, sf_dir) -> str:
+    """Write lineitem once per dataset, Z-ordered by (l_partkey,
+    l_orderkey) into 16 files with a min/max manifest; returns its dir."""
+    from .operators.zorder import MANIFEST, write_zordered
+
+    zpath = _zorder_layout_path(sf_dir)
+    # re-verify ownership at the trust point: manifest existence is what
+    # makes us serve the layout as lineitem data
+    derived.assert_owned(zpath)
+    if not os.path.exists(os.path.join(zpath, MANIFEST)):
+        write_zordered(
+            load_table(spark, sf_dir, "lineitem"),
+            zpath,
+            ["l_partkey", "l_orderkey"],
+            n_files=16,
+        )
+    return zpath
+
+
 @register(
     "zorder_skipping_scan",
     """
@@ -1257,53 +1289,9 @@ def zorder_skipping_scan(spark, sf_dir):
     oracle computes the same aggregate over the raw table: skipping
     must be invisible to results. Layout build is cached per sf_dir
     (build-once/serve-many, same lifecycle as the IVF index)."""
-    import hashlib
-    import os
-    import tempfile
+    from .operators.zorder import read_with_skipping
 
-    from .operators.zorder import MANIFEST, read_with_skipping, write_zordered
-
-    # tag carries a dataset fingerprint (mtime+size of the source
-    # parquet), not just the path: a regenerated fixture under the same
-    # path invalidates the cached layout instead of silently serving
-    # stale files (same pattern as the IVF centroid cache key)
-    src = os.path.join(str(sf_dir), "lineitem.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        fp = "nofp"
-    tag = hashlib.md5(f"{sf_dir}|{fp}".encode()).hexdigest()[:12]
-    # per-UID cache path + ownership check: the temp dir is shared and
-    # world-writable, so a predictable path trusted on mere manifest
-    # existence would let any local process pre-plant a crafted manifest
-    # and have its rows silently served as lineitem data (and two users
-    # benching the same fixture would collide on ownership).  The uid in
-    # the name partitions users; the stat check refuses to read a cache
-    # dir this uid does not own.
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"starrysky_zorder_u{uid}_{tag}"
-    )
-    # ownership gate covers BOTH paths: a pre-existing dir this uid does
-    # not own is never trusted as a cache AND never written into (a
-    # pre-planted world-writable dir would let its owner swap the files
-    # between our write and our read)
-    if os.path.exists(zpath):
-        st_dir = os.stat(zpath)
-        if getattr(st_dir, "st_uid", uid) != uid:
-            raise PermissionError(
-                f"zorder cache dir {zpath} is owned by uid "
-                f"{st_dir.st_uid}, not {uid} — refusing to use it"
-            )
-    cached = os.path.exists(os.path.join(zpath, MANIFEST))
-    if not cached:
-        write_zordered(
-            load_table(spark, sf_dir, "lineitem"),
-            zpath,
-            ["l_partkey", "l_orderkey"],
-            n_files=16,
-        )
+    zpath = build_zorder_layout(spark, sf_dir)
     box = {"l_partkey": (100, 200), "l_orderkey": (5000, 9000)}
     df, _n_read, _n_total = read_with_skipping(spark, zpath, box)
     return (

@@ -730,12 +730,11 @@ def _write_sentinels_pyarrow(stage: str, src_path: str, sentinel_id: int) -> boo
         logging.getLogger(__name__).warning(
             "pyarrow sentinel fast path failed, falling back to Spark: %r", exc
         )
-        try:
-            for tgt in written:
-                if _os.path.exists(tgt):
-                    _os.remove(tgt)
-        except OSError:
-            pass
+        for tgt in written:
+            try:
+                _os.remove(tgt)
+            except OSError:
+                pass  # missing or undeletable: still clean the rest
         return False
 
 

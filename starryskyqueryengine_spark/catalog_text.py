@@ -5,9 +5,12 @@ constant-for-constant."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from . import derived
 from .catalog import register
 from .catalog_dedup import _sql_md5int
 from .functions import text as tx
@@ -1041,55 +1044,11 @@ BM25_INDEX_BUCKETS = 64
 
 
 def _bm25_index_path(sf_dir) -> str:
-    import hashlib
-    import os
-    import tempfile
-
-    # dataset-fingerprinted tag (mtime+size of the source parquet): a
-    # regenerated fixture invalidates the index instead of serving stale
-    # postings — same pattern as the IVF centroid cache key
-    src = os.path.join(str(sf_dir), "documents.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        fp = "nofp"
-    tag = hashlib.md5(f"{sf_dir}|{fp}".encode()).hexdigest()[:12]
-    # per-UID path + ownership gate (review r13, closing the gap with
-    # the zorder layout cache which got this in r8): the temp dir is
-    # shared and world-writable, so a predictable path trusted on mere
-    # stats.json existence would let any local process pre-plant a
-    # crafted index and have its postings served as query results (and
-    # two users benching the same fixture would collide on ownership).
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    path = os.path.join(
-        tempfile.gettempdir(), f"starrysky_bm25idx_u{uid}_{tag}"
+    # per-uid, dataset-fingerprinted, ownership-gated (derived.owned_dir):
+    # a pre-planted dir at the predictable temp path is never trusted
+    return derived.owned_dir(
+        "starrysky_bm25idx", os.path.join(str(sf_dir), "documents.parquet")
     )
-    _assert_owned(path)
-    return path
-
-
-def _assert_owned(path: str) -> None:
-    """Refuse a cache dir owned by another uid.  stat() directly and
-    treat FileNotFoundError as fine (ADVICE r13: the exists()+stat()
-    pair had a TOCTOU window where the dir vanishing between the two
-    raised an unhandled FileNotFoundError; a not-yet-created dir is the
-    normal build-fresh case, not an error).  Callers re-invoke this at
-    each TRUST point (just before believing stats.json means a complete
-    index), not only at path computation, so a dir planted after the
-    path gate is still caught."""
-    import os
-
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    try:
-        st_dir = os.stat(path)
-    except FileNotFoundError:
-        return
-    if getattr(st_dir, "st_uid", uid) != uid:
-        raise PermissionError(
-            f"bm25 index cache dir {path} is owned by uid "
-            f"{st_dir.st_uid}, not {uid} — refusing to use it"
-        )
 
 
 def build_bm25_index(spark, sf_dir) -> str:
@@ -1102,14 +1061,13 @@ def build_bm25_index(spark, sf_dir) -> str:
     Z-order layout already follow; at 100 TB the index build is the
     one-time tokenization cost the scan-time bm25_search pays per query."""
     import json
-    import os
 
     path = _bm25_index_path(sf_dir)
     # re-verify ownership at the trust point (ADVICE r13): stats.json
     # existence is what makes us SERVE the index, so the gate must run
     # here too — a dir planted between path computation and this check
     # would otherwise have its postings served as query results
-    _assert_owned(path)
+    derived.assert_owned(path)
     if os.path.exists(os.path.join(path, "stats.json")):
         return path
     docs = load_table(spark, sf_dir, "documents")
@@ -1146,7 +1104,6 @@ def bm25_probe(spark, index_path: str, terms) -> "F.DataFrame":
     only for candidate docs. No tokenization, no corpus-wide aggregate
     at query time."""
     import json
-    import os
 
     with open(os.path.join(index_path, "stats.json")) as f:
         stats = json.load(f)
@@ -1212,30 +1169,17 @@ def bm25_indexed_search(spark, sf_dir):
     return bm25_probe(spark, path, BM25_QUERY_TERMS)
 
 
-_BPE_MERGES_CACHE: dict = {}
 BPE_TRAIN_DOCS = 200
 BPE_N_MERGES = 256
 
 
 def _bpe_merges_for(spark, sf_dir):
-    """Train-once-per-dataset BPE merge table (same lifecycle as the
-    IVF centroids / BM25 index): deterministic bounded sample — the
-    first BPE_TRAIN_DOCS docs by doc_id — trained driver-side. Keyed on
-    (sf_dir, dataset fingerprint) like the BM25 index / IVF centroid
-    caches: a regenerated documents.parquet under the same path trains
-    fresh merges instead of serving the old corpus's table."""
-    import os
-
+    """Train-once-per-dataset BPE merge table (``derived.memo``, the
+    same lifecycle as the IVF centroids): deterministic bounded sample
+    — the first BPE_TRAIN_DOCS docs by doc_id — trained driver-side."""
     from .functions.bpe import train_bpe
 
-    src = os.path.join(str(sf_dir), "documents.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        fp = "nofp"
-    key = f"{sf_dir}|{fp}"
-    if key not in _BPE_MERGES_CACHE:
+    def train():
         sample = [
             r["text"] or ""
             for r in load_table(spark, sf_dir, "documents")
@@ -1244,8 +1188,11 @@ def _bpe_merges_for(spark, sf_dir):
             .orderBy("doc_id")
             .collect()
         ]
-        _BPE_MERGES_CACHE[key] = train_bpe(sample, n_merges=BPE_N_MERGES)
-    return _BPE_MERGES_CACHE[key]
+        return train_bpe(sample, n_merges=BPE_N_MERGES)
+
+    return derived.memo(
+        spark, "bpe_merges", os.path.join(str(sf_dir), "documents.parquet"), train
+    )
 
 
 @register(

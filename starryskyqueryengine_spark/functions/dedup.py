@@ -16,6 +16,8 @@ verifying candidates, applied only to the (tiny) candidate set.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -76,24 +78,13 @@ def with_shingles(df: DataFrame, text_col: str = "text", out: str = "shingles") 
     )
 
 
-def shingle_hashes(shingle_col: str = "shingles") -> Column:
-    """array<bigint> of base hashes, one per distinct shingle."""
-    return F.transform(F.col(shingle_col), lambda s: md5int(s))
+class MinHashParts(NamedTuple):
+    """The two cached skinny tables of a MinHash pipeline: banding reads
+    only ``sigs`` (id, sig), Jaccard verification only ``shingles``
+    (id, shingles)."""
 
-
-def _affine_mod(a: int, b: int):
-    # closure factory: pyspark's higher-order fns inspect lambda arity, so
-    # default-arg captures (lambda h, a=a: ...) would be misread as 2-ary
-    return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_P)
-
-
-def minhash_signature(hash_col: str = "_sh_hash") -> Column:
-    """array<bigint> MinHash signature of length NUM_HASHES."""
-    sig = [
-        F.array_min(F.transform(F.col(hash_col), _affine_mod(a, b)))
-        for a, b in zip(MINHASH_A, MINHASH_B)
-    ]
-    return F.array(*sig)
+    shingles: DataFrame
+    sigs: DataFrame
 
 
 def minhash_signatures(
@@ -101,8 +92,8 @@ def minhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     caches: list | None = None,
-) -> DataFrame:
-    """(id, shingles, sig) for docs with at least one shingle.
+) -> MinHashParts:
+    """(id, shingles) and (id, sig) for docs with at least one shingle.
 
     ``caches``: optional out-param collecting the internally persisted
     DataFrames so LONG-RUNNING callers (NearDupGate's per-batch admits,
@@ -135,28 +126,15 @@ def minhash_signatures(
     sigs = h.groupBy(id_col).agg(*aggs).select(
         id_col, F.array(*[F.col(f"_m{i}") for i in range(NUM_HASHES)]).alias("sig")
     )
-    # Persist the TWO SKINNY tables — (id, shingles) and (id, sig) —
-    # never their join (optimization r15, adjudicating verdict r14 #1).
-    # r13 cached only `sh`, so LSH banding and both Jaccard-verify legs
-    # re-ran the explode + 16-min-hash aggregate (3 executions per
-    # pipeline); r14 cached the JOINED (id, shingles, sig) table, which
-    # ran the aggregate once but paid a shingle-array-sized join shuffle
-    # + a wider cache fill, and dedup_survivors regressed +18% on two
-    # boots.  The join is pure container convenience: banding reads only
-    # (id, sig) and verify reads only (id, shingles) — no consumer needs
-    # both in one row.  The skinny signature cache runs the aggregate
-    # once AND the join zero times; downstream helpers pick the table
-    # they need via the handles attached below (ids are identical across
-    # the three frames by construction: sigs = groupBy(id) over the
-    # explode of sh, so the lazy joined view stays a correct fallback
-    # for any caller that materializes it).
+    # Cache the two skinny tables, never their join: banding reads only
+    # (id, sig) and verification only (id, shingles), and caching the
+    # joined table paid a shingle-array-sized join shuffle plus a wider
+    # cache fill (dedup_survivors +18% when tried in r14).
     sh = sh.cache()
     sigs = sigs.cache()
-    out = sh.join(sigs, id_col)
-    out._ssqe_minhash_parts = (sh, sigs)
     if caches is not None:
         caches.extend((sh, sigs))
-    return out
+    return MinHashParts(sh, sigs)
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -185,14 +163,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
 def lsh_band_rows(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, band, band_sig) rows from a signature table: one explode to
     BANDS rows per doc; band_sig joins equal iff the band's LSH_ROWS
-    signature slots all match.
-
-    Banding touches only (id, sig): when the input carries the skinny
-    cached-parts handle from :func:`minhash_signatures`, band off the
-    cached (id, sig) table directly instead of the shingles⋈sig view."""
-    parts = getattr(sigs, "_ssqe_minhash_parts", None)
-    if parts is not None:
-        sigs = parts[1]
+    signature slots all match."""
     return sigs.select(
         F.col(id_col),
         F.explode(
@@ -248,12 +219,7 @@ def jaccard_verify(
     pairs: DataFrame, shingled: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Exact Jaccard on candidate pairs (applied to candidates only —
-    never the quadratic pair space).  Verification touches only
-    (id, shingles): prefer the skinny cached shingle table when the
-    input carries the parts handle from :func:`minhash_signatures`."""
-    parts = getattr(shingled, "_ssqe_minhash_parts", None)
-    if parts is not None:
-        shingled = parts[0]
+    never the quadratic pair space)."""
     sh = shingled.select(F.col(id_col), F.col("shingles"))
     a = sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("shingles", "sh_a")
     b = sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("shingles", "sh_b")
@@ -711,28 +677,6 @@ def dedup_survivors(
     return docs.select(id_col).join(doomed, id_col, "left_anti")
 
 
-def simhash_from_hashes(hash_col: Column) -> Column:
-    """32-bit SimHash from an array<bigint> of feature hashes: bit j is
-    set when the majority of feature hashes have bit j set (ties -> 0).
-    Pure array expressions — no UDF."""
-    def vote(j: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_terms = [
-        F.when(
-            F.aggregate(hash_col, F.lit(0).cast("long"), vote(j)) > 0,
-            F.lit(1 << j).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for j in range(32)
-    ]
-    sig = bit_terms[0]
-    for t in bit_terms[1:]:
-        sig = sig + t
-    return sig
-
-
 def simhash_pairs(
     sigs: DataFrame,
     max_hamming: int,
@@ -861,13 +805,9 @@ class NearDupGate:
         caches: list = []
         sigs = minhash_signatures(
             docs, text_col=text_col, id_col=idc, caches=caches
-        )
-        # ids(sig table) == ids(joined view) by construction; the skinny
-        # cached table makes the anti-join probe cheap
-        parts = getattr(sigs, "_ssqe_minhash_parts", None)
-        sig_ids = (parts[1] if parts is not None else sigs).select(idc)
+        ).sigs
         short_bands = (
-            docs.join(sig_ids, idc, "left_anti")
+            docs.join(sigs.select(idc), idc, "left_anti")
             .select(
                 F.col(idc),
                 F.lit(-1).alias("band"),

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import derived
 from ..session import apply_runtime_confs
 
 TABLES = [
@@ -52,98 +53,17 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Schema catalog (optimization r14, guide §1.2/§6): ``spark.read.parquet``
-# re-infers the schema on EVERY call — a footer read plus DataSource
-# resolution measured at ~0.10-0.15 s per call on this driver, paid
-# ~330 times per bench lap (30+ s/lap of pure metadata overhead).  A
-# production deployment reads through a metastore/table-format catalog
-# precisely so that per-query schema inference never happens; this dict
-# is that catalog for the fixture tables.  It memoizes ONLY the inferred
-# StructType — never data, never results — and the key carries the
-# file's (mtime_ns, size) fingerprint, so a rewritten fixture file is
-# re-inferred from its new footer (same freshness contract a metastore
-# gets from invalidation on commit).
-_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
-def _schema_cache_key(path: str) -> tuple | None:
-    """Stat fingerprint for the schema catalog.  For a plain file the
-    (mtime_ns, size) pair changes on any rewrite.  For a directory-shaped
-    dataset (ADVICE r14) an in-place part-file rewrite keeps the directory
-    mtime, so fold in the newest/biggest immediate child as well."""
-    import os
-
-    try:
-        st = os.stat(path)
-        if not os.path.isdir(path):
-            return (path, st.st_mtime_ns, st.st_size)
-        newest = 0
-        total = 0
-        n = 0
-        with os.scandir(path) as it:
-            for e in it:
-                cst = e.stat()
-                newest = max(newest, cst.st_mtime_ns)
-                total += cst.st_size
-                n += 1
-        return (path, st.st_mtime_ns, newest, total, n)
-    except OSError:
-        return None
-
-
-# DataFrame-plan memo (optimization r15, guide §1.2): even WITH the
-# cached schema, ``spark.read.schema(s).parquet(path)`` pays ~20-30 ms
-# of DataSource resolution py4j traffic per call — ~330 load_table
-# calls per bench lap is seconds of pure plan re-construction.  A
-# DataFrame is an immutable lazy plan, so handing every caller in the
-# same session the SAME plan object is semantically identical to
-# re-deriving it (this is what a catalog's resolved-relation cache
-# does).  Memoizes ONLY the lazy plan — never data, never results —
-# per session object (dies with the session), keyed by the same stat
-# fingerprint as the schema catalog so a rewritten file re-resolves.
-def _df_cache(spark: SparkSession) -> dict | None:
-    cache = getattr(spark, "_ssqe_df_cache", None)
-    if cache is None:
-        cache = {}
-        try:
-            spark._ssqe_df_cache = cache
-        except Exception:
-            return None  # exotic session proxy rejects attributes: no memo
-    return cache
-
-
 def _read_fixture(spark: SparkSession, path: str) -> DataFrame:
-    """Read a fixture parquet file through the schema + plan catalogs."""
-    key = _schema_cache_key(path)  # None: let spark.read surface the error
-    cache = _df_cache(spark) if key is not None else None
-    if cache is not None:
-        df = cache.get(("raw", key))
-        if df is not None:
-            return df
-    cached = _SCHEMA_CACHE.get(key) if key is not None else None
-    if cached is not None:
-        df = spark.read.schema(cached).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if key is not None:
-            _SCHEMA_CACHE[key] = df.schema
-    if cache is not None:
-        cache[("raw", key)] = df
-    return df
+    """The fixture file's plan, memoized per session (``derived``)."""
+    return derived.memo(spark, "raw", path, lambda: spark.read.parquet(path))
 
 
 def fixture_schema(spark: SparkSession, sf_dir: str, name: str):
-    """The RAW (un-normalized) fixture file schema, via the same stat-
-    fingerprinted catalog — for callers that need a schema without a
-    frame (streaming sources staging the fixture file)."""
+    """The RAW (un-normalized) fixture file schema — for callers that
+    need a schema without a frame (streaming sources staging the
+    fixture file)."""
     apply_runtime_confs(spark)
-    path = f"{sf_dir}/{name}.parquet"
-    key = _schema_cache_key(path)
-    if key is not None:
-        cached = _SCHEMA_CACHE.get(key)
-        if cached is not None:
-            return cached
-    return _read_fixture(spark, path).schema
+    return _read_fixture(spark, f"{sf_dir}/{name}.parquet").schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -153,16 +73,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return _read_fixture(spark, path)
     # events: memoize the NORMALIZED plan too (normalize_events_ts is a
     # pure projection, but it is several py4j calls per load)
-    key = _schema_cache_key(path)
-    cache = _df_cache(spark) if key is not None else None
-    if cache is not None:
-        df = cache.get(("events", key))
-        if df is not None:
-            return df
-    df = normalize_events_ts(_read_fixture(spark, path))
-    if cache is not None:
-        cache[("events", key)] = df
-    return df
+    return derived.memo(
+        spark, "events", path,
+        lambda: normalize_events_ts(_read_fixture(spark, path)),
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:

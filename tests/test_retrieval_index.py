@@ -9,9 +9,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from starryskyqueryengine_spark import catalog_analytics, catalog_text
 from starryskyqueryengine_spark.functions.retrieval import (
     Bm25IncrementalIndex,
 )
+from starryskyqueryengine_spark.operators.zorder import MANIFEST
 
 TERMS = ("spark", "vector", "stream")
 
@@ -207,36 +209,43 @@ def test_committed_replay_is_exactly_once(spark, tmp_path):
     assert idx._stats()["txns"] == {"cdc": 8, "other": 1}
 
 
-def test_bm25_index_cache_refuses_foreign_ownership(monkeypatch, tmp_path):
-    """Review r13: the persisted BM25 index cache gets the same per-UID
-    ownership gate as the zorder layout cache (r8) — a pre-planted dir
-    at the predictable path, owned by another uid, must be refused, not
-    trusted as an index."""
-    import os
+# The two persisted per-uid caches: (catalog module, path fn, build fn,
+# the marker file whose existence makes the build trust the dir).
+OWNED_CACHES = {
+    "bm25": (catalog_text, "_bm25_index_path", "build_bm25_index", "stats.json"),
+    "zorder": (catalog_analytics, "_zorder_layout_path", "build_zorder_layout",
+               MANIFEST),
+}
 
-    import pytest as _pytest
 
-    from starryskyqueryengine_spark.catalog_text import _bm25_index_path
+@pytest.mark.parametrize("kind", sorted(OWNED_CACHES))
+def test_owned_cache_refuses_foreign_ownership(kind, monkeypatch, tmp_path):
+    """Review r13: the persisted BM25 index and Z-order layout caches
+    get a per-UID ownership gate — a pre-planted dir at the predictable
+    path, owned by another uid, must be refused, not trusted as a
+    cache."""
+    mod, path_fn, _, _ = OWNED_CACHES[kind]
+    cache_path = getattr(mod, path_fn)
 
     real_uid = os.getuid()
     fake_uid = real_uid + 1
     monkeypatch.setattr(os, "getuid", lambda: fake_uid)
     # compute the fake uid's path, then pre-plant it owned by OUR uid
     try:
-        planted = _bm25_index_path("/nonexistent-sf")
+        planted = cache_path("/nonexistent-sf")
     except PermissionError:
         planted = None
     if planted is None or os.path.exists(planted):
-        _pytest.skip("cannot stage a clean planted path on this host")
+        pytest.skip("cannot stage a clean planted path on this host")
     os.makedirs(planted)
     try:
-        with _pytest.raises(PermissionError, match="refusing"):
-            _bm25_index_path("/nonexistent-sf")
+        with pytest.raises(PermissionError, match="refusing"):
+            cache_path("/nonexistent-sf")
     finally:
         os.rmdir(planted)
     # and the happy path: our own uid's dir is accepted
     monkeypatch.setattr(os, "getuid", lambda: real_uid)
-    p = _bm25_index_path("/nonexistent-sf")
+    p = cache_path("/nonexistent-sf")
     assert f"u{real_uid}_" in os.path.basename(p)
 
 
@@ -245,15 +254,11 @@ def test_bm25_ownership_gate_has_no_toctou_window(monkeypatch, tmp_path):
     FileNotFoundError if the dir vanished between the two calls, and a
     dir planted after path computation was never re-checked.  The gate
     now stats directly (missing dir = fine, that's the build-fresh
-    case) and build_bm25_index re-runs it at the trust point."""
-    import os
-
-    import pytest as _pytest
-
-    from starryskyqueryengine_spark.catalog_text import _assert_owned
+    case) and the cache builders re-run it at the trust point."""
+    from starryskyqueryengine_spark.derived import assert_owned
 
     # missing path: plain return, no exception (the old code's window)
-    _assert_owned(str(tmp_path / "never-created"))
+    assert_owned(str(tmp_path / "never-created"))
 
     # a dir that appears foreign-owned is refused wherever the gate runs
     d = tmp_path / "planted"
@@ -273,27 +278,25 @@ def test_bm25_ownership_gate_has_no_toctou_window(monkeypatch, tmp_path):
         lambda p, *a, **k: _ForeignStat(real_stat(p, *a, **k))
         if str(p) == str(d) else real_stat(p, *a, **k),
     )
-    with _pytest.raises(PermissionError, match="refusing"):
-        _assert_owned(str(d))
+    with pytest.raises(PermissionError, match="refusing"):
+        assert_owned(str(d))
 
 
-def test_build_bm25_index_regates_at_trust_point(monkeypatch, tmp_path):
-    """The ownership check must run where stats.json existence is
-    TRUSTED (build_bm25_index), not only at path computation — a dir
-    planted between the two would otherwise have its postings served."""
-    import starryskyqueryengine_spark.catalog_text as ct
+@pytest.mark.parametrize("kind", sorted(OWNED_CACHES))
+def test_owned_cache_regates_at_trust_point(kind, monkeypatch, tmp_path):
+    """The ownership check must run where the marker file's existence
+    is TRUSTED (the cache build), not only at path computation — a dir
+    planted between the two would otherwise have its contents served."""
+    from starryskyqueryengine_spark import derived
 
+    mod, path_fn, build_fn, marker = OWNED_CACHES[kind]
     calls = []
-    monkeypatch.setattr(
-        ct, "_assert_owned", lambda p: calls.append(p)
-    )
-    monkeypatch.setattr(
-        ct, "_bm25_index_path", lambda sf: str(tmp_path / "idx")
-    )
-    # plant a "complete" index so build returns at the trust point
+    monkeypatch.setattr(derived, "assert_owned", lambda p: calls.append(p))
+    monkeypatch.setattr(mod, path_fn, lambda sf: str(tmp_path / "idx"))
+    # plant a "complete" cache so the build returns at the trust point
     (tmp_path / "idx").mkdir()
-    (tmp_path / "idx" / "stats.json").write_text("{}")
-    out = ct.build_bm25_index(None, "/nonexistent-sf")
+    (tmp_path / "idx" / marker).write_text("{}")
+    out = getattr(mod, build_fn)(None, "/nonexistent-sf")
     assert out == str(tmp_path / "idx")
     assert calls == [str(tmp_path / "idx")]
 

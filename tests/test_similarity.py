@@ -381,14 +381,14 @@ def test_ann_ivf_topk_trained_recall_vs_exact(spark):
     """The exact-trainer IVF must keep useful recall vs brute force
     (the original rows-only query's recall contract, now on the
     value-checked path)."""
-    from starryskyqueryengine_spark import catalog_similarity as cs
+    from starryskyqueryengine_spark import derived
     from starryskyqueryengine_spark.catalog_similarity import (
         ann_cosine_topk,
         ann_ivf_topk,
     )
 
     sf = "/root/testdata/sf0.001"
-    cs._IVF_CENTROIDS.clear()  # force a fresh train in this process
+    derived.reset()  # force a fresh train in this process
     exact = {
         (r["q_id"], r["nn_id"]) for r in ann_cosine_topk(spark, sf).collect()
     }
@@ -467,9 +467,9 @@ def test_cross_source_dup_matrix_consistent_with_pair_set(spark):
     assert all(r["source_a"] <= r["source_b"] for r in rows)
 
     docs = load_table(spark, SF, "documents")
-    sigs = dd.minhash_signatures(docs)
+    parts = dd.minhash_signatures(docs)
     n_pairs = (
-        dd.jaccard_verify(dd.lsh_candidate_pairs(sigs), sigs)
+        dd.jaccard_verify(dd.lsh_candidate_pairs(parts.sigs), parts.shingles)
         .filter(F.col("jaccard") >= MINHASH_VERIFY_THRESHOLD)
         .count()
     )

@@ -1302,3 +1302,50 @@ def test_sentinel_fast_path_unsupported_source_returns_false(tmp_path):
     stage.mkdir()
     assert _write_sentinels_pyarrow(str(stage), str(src), 10**9) is False
     assert list(stage.iterdir()) == []  # nothing partially written
+
+
+def test_sentinel_fast_path_cleanup_survives_a_failed_remove(tmp_path, monkeypatch):
+    """ADVICE r15: when the fast path fails after writing sentinels, one
+    failed os.remove must not leave the remaining partial sentinels
+    behind (the cleanup used to stop at the first failure)."""
+    import datetime as _dt
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from starryskyqueryengine_spark.catalog_stream import _write_sentinels_pyarrow
+
+    src = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1], pa.int64()),
+            "ts": pa.array([_dt.datetime(2024, 1, 1)], pa.timestamp("us")),
+            "user_id": pa.array([7], pa.int64()),
+            "event_type": pa.array(["click"], pa.string()),
+            "value": pa.array([1.0], pa.float64()),
+            "props": pa.array(["{}"], pa.string()),
+        }),
+        src,
+    )
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    first, second = (str(stage / f"z_sentinel_{i}.parquet") for i in (0, 1))
+
+    real_utime, real_remove = os.utime, os.remove
+
+    def utime(p, *a, **k):  # fail after BOTH sentinels are on disk
+        if p == second:
+            raise OSError("injected utime failure")
+        return real_utime(p, *a, **k)
+
+    def remove(p, *a, **k):
+        if p == first:
+            raise OSError("injected remove failure")
+        return real_remove(p, *a, **k)
+
+    monkeypatch.setattr(os, "utime", utime)
+    monkeypatch.setattr(os, "remove", remove)
+    assert _write_sentinels_pyarrow(str(stage), src, 10**9) is False
+    assert os.path.exists(first)  # the injected failure
+    assert not os.path.exists(second)

@@ -11,88 +11,27 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_spark, run_lap, warm_up  # noqa: E402
 from starryskyqueryengine_spark import catalog  # noqa: E402
-from starryskyqueryengine_spark.session import get_spark  # noqa: E402
-
-
-def run_df(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
     label = sys.argv[1] if len(sys.argv) > 1 else "lap"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    spark = get_spark(
-        "ssqe-lap",
-        master=f"local[{cpus}]",
-        extra_confs={
-            "spark.cleaner.periodicGC.interval": "1min",
-            "spark.python.worker.reuse": "true",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def force_gc() -> None:
-        import gc
-
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        spark.sparkContext._jvm.System.gc()
+    spark = bench_spark("ssqe-lap", cpus)
 
     import __spark_entry__ as entrymod
 
     queries = dict(catalog.get_queries())
-    run_df(spark.read.parquet(f"{sf_dir}/region.parquet"))
-
-    def _noop_batches(batches):
-        yield from batches
-
-    run_df(spark.range(0, cpus, 1, numPartitions=cpus).mapInPandas(
-        _noop_batches, "id long"))
-    from starryskyqueryengine_spark.sources.paged_datasource import (
-        register_paged_sources,
-    )
-
-    register_paged_sources(spark)
-    run_df(
-        spark.read.format("starrysky_paged")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("max_pages", "1").option("num_partitions", "1").load()
-    )
-
+    warm_up(spark, sf_dir, cpus)
     # warm lap (uncounted): absorb codegen/first-touch costs so the
     # measured lap compares steady state between trees
-    GC_EVERY, GC_AFTER_SEC = 8, 1.0
-    results: dict[str, float] = {}
-    for measured in (False, True):
-        force_gc()
-        since_gc = 0
-        for name, fn in queries.items():
-            if since_gc >= GC_EVERY:
-                force_gc()
-                since_gc = 0
-            t0 = time.perf_counter()
-            run_df(fn(spark, sf_dir))
-            dt = time.perf_counter() - t0
-            if measured:
-                results[name] = round(dt, 4)
-            spark.catalog.clearCache()
-            if dt > GC_AFTER_SEC:
-                force_gc()
-                since_gc = 0
-            else:
-                since_gc += 1
-        t0 = time.perf_counter()
-        run_df(entrymod.entry(spark))
-        if measured:
-            results["flagship_materialize"] = round(time.perf_counter() - t0, 4)
-        spark.catalog.clearCache()
+    run_lap(spark, sf_dir, queries, entrymod.entry)
+    results = run_lap(spark, sf_dir, queries, entrymod.entry)
     spark.stop()
     print(json.dumps({"label": label,
                       "lap_total": round(sum(results.values()), 2),

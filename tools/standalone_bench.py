@@ -20,8 +20,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_spark, force_gc, run_df, warm_up  # noqa: E402
 from starryskyqueryengine_spark import catalog  # noqa: E402
-from starryskyqueryengine_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -37,32 +37,10 @@ def main() -> None:
     args = ap.parse_args()
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    spark = get_spark(
-        "ssqe-standalone",
-        master=f"local[{cpus}]",
-        extra_confs={"spark.cleaner.periodicGC.interval": "1min",
-                     "spark.python.worker.reuse": "true"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_spark("ssqe-standalone", cpus)
     queries = catalog.get_queries()
-
-    # same warmups as bench.py so lap 1 is comparable
-    spark.read.parquet(f"{args.sf}/region.parquet").write.format(
-        "noop").mode("overwrite").save()
-
-    def _noop_batches(batches):
-        yield from batches
-
-    spark.range(0, cpus, 1, numPartitions=cpus).mapInPandas(
-        _noop_batches, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    def force_gc() -> None:
-        import gc
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        spark.sparkContext._jvm.System.gc()
+    # same warm-ups as bench.py so lap 1 is comparable
+    warm_up(spark, args.sf, cpus)
 
     for name in args.queries:
         fn = queries[name]
@@ -77,12 +55,12 @@ def main() -> None:
             spark.catalog.clearCache()
         laps, builds = [], []
         for _ in range(args.laps):
-            force_gc()
+            force_gc(spark)
             spark.sparkContext.setJobDescription(f"standalone:{name}")
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
+            run_df(df)
             t2 = time.perf_counter()
             builds.append(round(t1 - t0, 3))
             laps.append(round(t2 - t0, 3))
